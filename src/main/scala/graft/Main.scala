@@ -97,26 +97,32 @@ object Main {
 
   /** Batch mode: spool stdin to a file so the input is splittable/
     * re-scannable (the batch pipeline makes several passes; a 100 TB
-    * deployment points --input at the durable landing zone instead). */
-  private def runBatch(spark: SparkSession, opts: Map[String, String],
-                       output: String, config: TargetConfig): Unit = {
-    val input = opts.get("input") match {
-      case Some(p) => p
+    * deployment points --input at the durable landing zone instead). The
+    * spool file is deleted when the sync ends, failed or not; an
+    * `--input` file is never deleted. */
+  private[graft] def runBatch(spark: SparkSession, opts: Map[String, String],
+                              output: String, config: TargetConfig): Unit = {
+    def sync(input: String): Unit = {
+      val result = SingerPipeline.run(spark, input, output, config)
+      result.outputs.foreach(o =>
+        System.err.println(s"[graft] wrote ${o.rows} rows -> ${o.path}"))
+      SingerPipeline.emitState(result.state)
+    }
+    opts.get("input") match {
+      case Some(p) => sync(p)
       case None =>
-        val tmp = tempRoot(config) match {
+        val spool = tempRoot(config) match {
           case Some(root) => Files.createTempFile(root, "singer-stdin", ".jsonl")
           case None => Files.createTempFile("singer-stdin", ".jsonl")
         }
-        Files.copy(System.in, tmp, StandardCopyOption.REPLACE_EXISTING)
-        if (Files.size(tmp) == 0L)
-          System.err.println("[graft] warning: 0 bytes read from stdin — " +
-            "is the tap connected? (zero-message input is not an error)")
-        tmp.toString
+        try {
+          Files.copy(System.in, spool, StandardCopyOption.REPLACE_EXISTING)
+          if (Files.size(spool) == 0L)
+            System.err.println("[graft] warning: 0 bytes read from stdin — " +
+              "is the tap connected? (zero-message input is not an error)")
+          sync(spool.toString)
+        } finally Files.deleteIfExists(spool)
     }
-    val result = SingerPipeline.run(spark, input, output, config)
-    result.outputs.foreach(o =>
-      System.err.println(s"[graft] wrote ${o.rows} rows -> ${o.path}"))
-    SingerPipeline.emitState(result.state)
   }
 
   /** Live mode: raw stdin through the DSv2 source — no spool directory,

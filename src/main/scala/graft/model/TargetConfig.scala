@@ -26,7 +26,11 @@ package graft.model
   *                        epoch (> 0); fields first appearing after row N are not
   *                        passed through. <= 0 (default) scans all records — exact
   *                        reference parity
-  * @param strictValidation abort on the first JSON-Schema violation (reference P5)
+  * @param strictValidation abort on the first JSON-Schema violation in input order
+  *                        (reference P5); every epoch is checked before any is written
+  * @param inlineValidation check records inside the write pass instead of before it
+  *                        (batch ingest only): one pass less, but a violation aborts
+  *                        mid-write and can leave partial output
   * @param tempDir         local spool/staging directory (L7, reference
   *                        __init__.py:46-50,91): batch stdin spool files, stream-mode
   *                        watch/checkpoint dirs, and spark.local.dir all land here

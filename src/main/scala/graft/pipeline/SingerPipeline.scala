@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import java.util.concurrent.{Callable, ExecutionException, ExecutorService, Executors}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -16,9 +18,13 @@ import graft.validate.Constraints
   *
   * Scale design (SURVEY.md §3.2 mapping):
   *  - RECORD lines never touch the driver: they flow scan → `from_json` →
-  *    constraint predicates → flatten select-list → parquet sink, all
-  *    codegen'd and partition-parallel. At 100 TB the input splits across
-  *    executors like any text scan.
+  *    constraint check → flatten select-list → parquet sink, all
+  *    partition-parallel. At 100 TB the input splits across executors like
+  *    any text scan.
+  *  - Every (stream, schema epoch) is inferred and validated before any is
+  *    written, concurrently from a driver thread pool; the writes then run
+  *    one stream per thread. Under the default (not inline) validation, an
+  *    invalid record anywhere fails the run with no stream written.
   *  - SCHEMA/STATE are control-plane (a handful of lines per run,
   *    reference corpus has 13); only those are collected, preserving file
   *    order via `monotonically_increasing_id` (monotone in file offset for
@@ -72,11 +78,16 @@ object SingerPipeline {
     // When the input already has >= defaultParallelism splits (any real
     // multi-file corpus — and any 100 TB one), this is a no-op: no
     // shuffle of raw input bytes is ever added at scale.
+    // The fan-out is cut from the plan as an RDD, so it runs once: every
+    // later pass reads its shuffle output instead of re-scanning the
+    // split, and Catalyst cannot push a pass's filters below it into the
+    // one-task scan (measured: 40% of batch_flat's task CPU ran there).
     val scanParts = raw.rdd.getNumPartitions
     val lines =
-      if (scanParts < spark.sparkContext.defaultParallelism)
-        raw.repartition(spark.sparkContext.defaultParallelism)
-      else raw
+      if (scanParts < spark.sparkContext.defaultParallelism) {
+        val fanned = raw.repartition(spark.sparkContext.defaultParallelism)
+        spark.createDataFrame(fanned.rdd, fanned.schema)
+      } else raw
 
     // Envelope dispatch (P2) via codegen'd JSON path extraction — the full
     // record payload is NOT parsed here.
@@ -147,13 +158,13 @@ object SingerPipeline {
       .select(col("idx"), col("stream"),
               get_json_object(col("value"), "$.record").as("rec"),
               get_json_object(col("value"), "$.time_extracted").as("time_extracted"))
-    // Persist the parsed records only when several streams will each
-    // filter the same scan. For the single-stream case, measured at
-    // sf0.1: caching costs more than the (cheap, codegen'd) text
-    // re-scans the extent/validate/write passes perform — so don't.
-    val multiStream = schemasByStream.size > 1 ||
+    // Persist the parsed records only when several epochs will each
+    // filter the same scan. With one epoch, caching was measured (sf0.1)
+    // to cost more than the text re-scans its inference, validation and
+    // write passes perform — so don't.
+    val multiEpoch = schemasByStream.size > 1 ||
       schemasByStream.values.exists(_.size > 1)
-    if (multiStream) records.persist(StorageLevel.MEMORY_AND_DISK)
+    if (multiEpoch) records.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       // Per-stream record extents, already computed in the pre-pass.
       val extents = prepass
@@ -173,86 +184,148 @@ object SingerPipeline {
       val emittedState = StateFold.emittedState(states, maxRecordIdx)
         .map(Singer.toJsonString)
 
-      val (codec, ext) = config.compressionCodecAndExt
       val timestamp = clock()
 
-      val outputs = schemasByStream.keys.toSeq.sorted.flatMap { stream =>
-        if (!extents.contains(stream)) None // zero-record stream: no file (fixes X4 crash)
-        else {
-          val sms = schemasByStream(stream)
-          // Epoch bounds: each schema governs records up to the next
-          // re-registration (positional last-wins, see above). The single-
-          // schema case is one epoch spanning everything — today's plan,
-          // unchanged.
-          val ends = sms.map(_.idx).drop(1) :+ Long.MaxValue
-          val path =
-            if (config.streamsInSeparateFolder) s"$outputUri/$stream"
-            else s"$outputUri/${Naming.outputKey(config, stream, timestamp)}"
+      // Epoch bounds: each schema governs records up to the next
+      // re-registration (positional last-wins, see above). Zero-record
+      // streams have no epochs and get no file (fixes X4 crash).
+      val epochs: Seq[Epoch] = for {
+        stream <- schemasByStream.keys.toSeq.sorted if extents.contains(stream)
+        sms = schemasByStream(stream)
+        ((sm, end), n) <- sms.zip(sms.map(_.idx).drop(1) :+ Long.MaxValue).zipWithIndex
+      } yield Epoch(stream, n, sm, end)
 
-          sms.zip(ends).zipWithIndex.foreach { case ((sm, end), epoch) =>
-            val declared = JsonSchemaConverter.toStructType(sm.schema,
-              config.decimalForMultipleOf)
-            val streamRecs = records.filter(col("stream") === stream &&
-              col("idx") > sm.idx && col("idx") < end)
+      def pathOf(stream: String): String = outputPath(outputUri, config, stream, timestamp)
 
-            // Union-schema passthrough (§1.4): find record-only fields.
-            val schema: StructType =
-              if (config.inferExtraFields) {
-                val inferred = JsonSchemaConverter.inferExtra(spark, streamRecs,
-                  config.inferSampleRows)
-                JsonSchemaConverter.mergeSchemas(declared, inferred)
-              } else declared
+      // Epochs are independent Spark jobs, each too small to fill the
+      // cores alone: run them from a driver pool sized by the input and
+      // the machine. Each job spends driver CPU (planning, codegen) as
+      // well as task CPU, so half the cores keep enough jobs in flight:
+      // on batch_nested (16 epochs, 4 cores) a full-width pool synced no
+      // faster and its peak RSS was ~16% higher.
+      // Phase 1 checks every epoch before phase 2 writes any, so (unless
+      // validation is inline) an invalid record anywhere leaves no stream
+      // written. Phase 2 writes one output path per thread, its epochs in
+      // order; streams whose naming maps them to one path share a thread
+      // and write in stream order, as a sequential run would.
+      val pool = Executors.newFixedThreadPool(
+        math.max(1, math.min(epochs.size, Runtime.getRuntime.availableProcessors / 2)))
+      try {
+        val checked = parMap(pool, epochs) { e =>
+          checkEpoch(spark, records.filter(col("stream") === e.stream &&
+              col("idx") > e.sm.idx && col("idx") < e.end), e.sm, config,
+            validate = config.strictValidation && !config.inlineValidation)
+        }
+        throwFirstViolation(epochs.map(_.stream).zip(checked))
 
-            var parsed = streamRecs.select(col("idx"), col("rec"), col("time_extracted"),
-              from_json(col("rec"), schema).as("r"))
-
-            if (config.strictValidation) {
-              val constraints = Constraints.compile(sm.schema)
-              if (config.inlineValidation) {
-                // Fused validation: the guard evaluates during the write
-                // scan itself — one less full pass over the records, the
-                // right trade at 100 TB. Cost: a violating record aborts
-                // MID-write, so partial output can exist (the reference has
-                // the same hazard across its already-flushed batches,
-                // §3.2); default stays the clean two-pass abort.
-                val v = Constraints.violation(constraints, col("r"), col("rec"))
-                parsed = parsed.filter(
+        val byPath = epochs.zip(checked).groupBy { case (e, _) => pathOf(e.stream) }
+          .toSeq.sortBy(_._1)
+        parMap(pool, byPath) { case (path, pathEpochs) =>
+          pathEpochs.foreach { case (e, c) =>
+            // Fused validation: the guard evaluates during the write scan
+            // itself — one less full pass over the records, the right
+            // trade at 100 TB. Cost: a violating record aborts MID-write,
+            // so partial output can exist (the reference has the same
+            // hazard across its already-flushed batches, §3.2); the
+            // default stays the checked-before-written path.
+            val guarded =
+              if (!(config.strictValidation && config.inlineValidation)) c
+              else {
+                val v = Constraints.violation(Constraints.compile(e.sm.schema),
+                  col("r"), col("rec"))
+                c.copy(parsed = c.parsed.filter(
                   when(v.isNotNull, raise_error(concat(
-                    lit(s"Record validation failed for stream $stream: "), v))
+                    lit(s"Record validation failed for stream ${e.stream}: "), v))
                     .cast("boolean"))
-                  .otherwise(lit(true)))
-              } else {
-                Constraints.validateOrThrow(parsed, constraints, col("r"), col("rec"), stream)
+                  .otherwise(lit(true))))
               }
-            }
-
-            // L1 metadata columns (reference legacy __init__.py:85-88):
-            // _sdc_extracted_at from the envelope, _sdc_batched_at = batch time.
-            val metaCols: Seq[Column] =
-              if (config.addMetadataColumns)
-                Seq(col("time_extracted").as("_sdc_extracted_at"),
-                    lit(timestamp).as("_sdc_batched_at"))
-              else Seq.empty
-            val flat = parsed.select(
-              FlattenColumns.columns(col("r"), schema) ++ metaCols: _*)
-
             // First epoch replaces any previous run's output; later epochs
             // append their (possibly differently-shaped) files alongside —
             // parquet readers merge by footer schema, same as the
             // reference's per-batch inferred files (§1.4).
-            var writer = flat.write.mode(if (epoch == 0) "overwrite" else "append")
-              .option("compression", codec)
-            if (config.fileSize > 0) writer = writer.option("maxRecordsPerFile", config.fileSize)
-            writer.parquet(path)
+            writeEpoch(guarded, path, if (e.n == 0) "overwrite" else "append",
+              timestamp, config)
           }
-          Some(StreamOutput(stream, path, extents(stream)._3))
         }
-      }
+      } finally pool.shutdown()
 
+      val outputs = epochs.map(_.stream).distinct
+        .map(stream => StreamOutput(stream, pathOf(stream), extents(stream)._3))
       IngestResult(emittedState, outputs,
         schemasByStream.view.mapValues(_.last.keyProperties).toMap)
-    } finally if (multiStream) { records.unpersist(); () }
+    } finally if (multiEpoch) { records.unpersist(); () }
   }
+
+  /** One stream's records between two of its SCHEMA messages: the `n`-th
+    * schema `sm` of `stream` governs the records with `sm.idx < idx < end`. */
+  private final case class Epoch(stream: String, n: Int, sm: SchemaMessage, end: Long)
+
+  /** One epoch's records ready to write: the schema they are parsed with
+    * (declared, plus the record-only fields when inferring), the parsed
+    * records (`idx`, `rec`, `time_extracted`, struct `r`), and the first
+    * invalid record's `(idx, message)` when validation ran and found one. */
+  private[graft] final case class CheckedEpoch(
+      schema: StructType, parsed: DataFrame, firstBad: Option[(Long, String)])
+
+  /** Shape one epoch's records (`idx`, `rec`, `time_extracted`) by the
+    * SCHEMA message `sm` that governs them and, when `validate`, find the
+    * first invalid one. Shared by the batch and the streaming ingest. */
+  private[graft] def checkEpoch(spark: SparkSession, recs: DataFrame, sm: SchemaMessage,
+                                config: TargetConfig, validate: Boolean): CheckedEpoch = {
+    val declared = JsonSchemaConverter.toStructType(sm.schema, config.decimalForMultipleOf)
+    // Union-schema passthrough (§1.4): record-only fields survive.
+    val schema: StructType =
+      if (config.inferExtraFields)
+        JsonSchemaConverter.mergeSchemas(declared,
+          JsonSchemaConverter.inferExtra(spark, recs, config.inferSampleRows))
+      else declared
+    val parsed = recs.select(col("idx"), col("rec"), col("time_extracted"),
+      from_json(col("rec"), schema).as("r"))
+    val firstBad =
+      if (validate) Constraints.firstViolation(parsed, Constraints.compile(sm.schema),
+        col("r"), col("rec"))
+      else None
+    CheckedEpoch(schema, parsed, firstBad)
+  }
+
+  /** Fail with the first invalid record in input order among the checked
+    * `(stream, epoch)`s, whichever stream it belongs to — the record the
+    * reference, which validates in arrival order, would have stopped at. */
+  private[graft] def throwFirstViolation(checked: Seq[(String, CheckedEpoch)]): Unit =
+    checked.flatMap { case (stream, c) => c.firstBad.map(stream -> _) }
+      .minByOption(_._2._1)
+      .foreach { case (stream, (_, msg)) => throw Constraints.violationError(stream, msg) }
+
+  /** Where `stream`'s parquet dataset goes for a run (or micro-batch)
+    * stamped `timestamp`. */
+  private[graft] def outputPath(outputUri: String, config: TargetConfig, stream: String,
+                                timestamp: String): String =
+    if (config.streamsInSeparateFolder) s"$outputUri/$stream"
+    else s"$outputUri/${Naming.outputKey(config, stream, timestamp)}"
+
+  /** Flatten one checked epoch and write it as parquet under `path`. */
+  private[graft] def writeEpoch(c: CheckedEpoch, path: String, mode: String,
+                                timestamp: String, config: TargetConfig): Unit = {
+    // L1 metadata columns (reference legacy __init__.py:85-88):
+    // _sdc_extracted_at from the envelope, _sdc_batched_at = batch time.
+    val metaCols: Seq[Column] =
+      if (config.addMetadataColumns)
+        Seq(col("time_extracted").as("_sdc_extracted_at"), lit(timestamp).as("_sdc_batched_at"))
+      else Seq.empty
+    var writer = c.parsed.select(FlattenColumns.columns(col("r"), c.schema) ++ metaCols: _*)
+      .write.mode(mode).option("compression", config.compressionCodecAndExt._1)
+    if (config.fileSize > 0) writer = writer.option("maxRecordsPerFile", config.fileSize)
+    writer.parquet(path)
+  }
+
+  /** `f` over `xs` on `pool`, results in `xs` order. Returns only once
+    * every call has finished, then rethrows the first failure in `xs`
+    * order: no job outlives the call, and the error does not depend on
+    * which thread finished first. */
+  private def parMap[A, B](pool: ExecutorService, xs: Seq[A])(f: A => B): Seq[B] =
+    pool.invokeAll(xs.map(x => (() => f(x)): Callable[B]).asJava).asScala.toSeq.map { r =>
+      try r.get() catch { case e: ExecutionException => throw e.getCause }
+    }
 
   /** State emission (S10, reference __init__.py:26-31): one JSON line to
     * stdout, nothing when state is absent. */

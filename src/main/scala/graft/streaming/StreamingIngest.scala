@@ -5,9 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.model._
-import graft.schema.JsonSchemaConverter
-import graft.functions.FlattenColumns
-import graft.validate.Constraints
+import graft.pipeline.SingerPipeline
 
 /** Structured-Streaming variant of the Singer ingest (SURVEY.md §7.1 #7):
   * `readStream.text(dir)` → `foreachBatch` running the same
@@ -147,47 +145,26 @@ final class StreamingIngest(
     // naming each batch lands in its own timestamped key, the streaming
     // analogue of the reference's one-file-per-batch output.
     val timestamp = clock()
-    val (codec, _) = config.compressionCodecAndExt
-    present.foreach { stream =>
+    // Every epoch of the batch is inferred and validated before the first
+    // write: a batch that fails validation leaves no append-mode files for
+    // its retry to duplicate. Inference costs one pass per epoch per
+    // MICRO-BATCH — on the streaming hot path that is per-trigger read
+    // amplification; latency-sensitive deployments should set
+    // infer_extra_fields=false or bound it via infer_sample_rows.
+    val checked = present.toSeq.flatMap { stream =>
       val epochs = epochsFor(stream)
       val streamRecs = records.filter(col("stream") === stream)
       val ends = epochs.map(_._1).drop(1) :+ Long.MaxValue
-      val path =
-        if (config.streamsInSeparateFolder) s"$outputUri/$stream"
-        else s"$outputUri/${Naming.outputKey(config, stream, timestamp)}"
-      epochs.zip(ends).foreach { case ((start, sm), end) =>
-        val declared = JsonSchemaConverter.toStructType(sm.schema,
-          config.decimalForMultipleOf)
-        val epochRecs = streamRecs.filter(col("idx") > start && col("idx") < end)
-        // Union-schema passthrough (§1.4), same as the batch path: record-
-        // only fields survive. Costs one inference pass per epoch per
-        // MICRO-BATCH — on the streaming hot path that is per-trigger
-        // read amplification; latency-sensitive deployments should set
-        // infer_extra_fields=false or bound it via infer_sample_rows.
-        val schema =
-          if (config.inferExtraFields) {
-            val inferred = JsonSchemaConverter.inferExtra(spark, epochRecs,
-              config.inferSampleRows)
-            JsonSchemaConverter.mergeSchemas(declared, inferred)
-          } else declared
-        val parsed = epochRecs
-          .select(col("rec"), col("time_extracted"), from_json(col("rec"), schema).as("r"))
-        if (config.strictValidation)
-          Constraints.validateOrThrow(parsed, Constraints.compile(sm.schema),
-            col("r"), col("rec"), stream)
-        // L1 metadata columns, mirroring SingerPipeline: extracted-at from
-        // the envelope, batched-at = this micro-batch's timestamp.
-        val metaCols: Seq[org.apache.spark.sql.Column] =
-          if (config.addMetadataColumns)
-            Seq(col("time_extracted").as("_sdc_extracted_at"),
-                lit(timestamp).as("_sdc_batched_at"))
-          else Seq.empty
-        var writer = parsed.select(FlattenColumns.columns(col("r"), schema) ++ metaCols: _*)
-          .write.mode("append")
-          .option("compression", codec)
-        if (config.fileSize > 0) writer = writer.option("maxRecordsPerFile", config.fileSize)
-        writer.parquet(path)
+      epochs.zip(ends).map { case ((start, sm), end) =>
+        stream -> SingerPipeline.checkEpoch(spark,
+          streamRecs.filter(col("idx") > start && col("idx") < end), sm, config,
+          validate = config.strictValidation)
       }
+    }
+    SingerPipeline.throwFirstViolation(checked)
+    checked.foreach { case (stream, c) =>
+      SingerPipeline.writeEpoch(c, SingerPipeline.outputPath(outputUri, config, stream, timestamp),
+        "append", timestamp, config)
     }
 
     // Last-wins registration, matching the reference's overwrite-on-every-
@@ -196,10 +173,11 @@ final class StreamingIngest(
     // loop: a batch that fails mid-write is retried by the restarted query
     // against the SAME baseline, so pre-SCHEMA records re-parse under the
     // schema that actually governed them (persisting first would reshape
-    // them under the batch's later schema on retry). Append-mode epoch
-    // files already written by the failed attempt can duplicate on retry —
-    // the trade the reference makes in the opposite direction (it LOSES
-    // everything since its last state on a crash).
+    // them under the batch's later schema on retry). A batch failing
+    // validation writes nothing; one failing mid-write (a crash, a storage
+    // error) leaves the append-mode files already written, which its
+    // retry duplicates — the trade the reference makes in the opposite
+    // direction (it LOSES everything since its last state on a crash).
     latestInBatch.foreach { case (stream, (raw, _)) => persistSchema(raw, stream) }
     schemas.updateAndGet(reg => reg ++ latestInBatch.map { case (k, (_, m)) => k -> m })
 

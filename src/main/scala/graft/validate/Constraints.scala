@@ -220,15 +220,32 @@ object Constraints {
     coalesce(checks :+ lit(null).cast("string"): _*)
   }
 
-  /** Strict mode (reference behavior): abort the job on the first invalid
-    * record. Runs as one distributed scan; only a single violating row (if
-    * any) is ever collected to the driver. */
-  def validateOrThrow(df: DataFrame, cc: CompiledConstraints,
-                      root: Column, raw: Column, stream: String): Unit = {
-    val bad = df.select(violation(cc, root, raw).as("v"))
-      .filter(col("v").isNotNull).limit(1).collect()
-    if (bad.nonEmpty)
-      throw new IllegalArgumentException(
-        s"Record validation failed for stream $stream: ${bad.head.getString(0)}")
+  /** The first invalid record in input order: its `idx` and violation
+    * message, or None when every record is valid. `df` carries the `idx`
+    * input-order column next to `root` and `raw`.
+    *
+    * Reduced by an aggregate rather than a `violation IS NOT NULL`
+    * filter: Catalyst would push that filter through the `from_json`
+    * projection (re-parsing the record once per referenced leaf) and below
+    * a round-robin exchange into the scan, validating a one-split input in
+    * one task. A projection stays where it is written, so the check runs
+    * on every post-exchange partition, and the `min` over
+    * `(idx, violation)` needs no `limit` take-ladder. */
+  def firstViolation(df: DataFrame, cc: CompiledConstraints,
+                     root: Column, raw: Column): Option[(Long, String)] = {
+    val first = df.select(col("idx"), violation(cc, root, raw).as("v"))
+      .agg(min(when(col("v").isNotNull, struct(col("idx"), col("v")))))
+      .head()
+    if (first.isNullAt(0)) None
+    else Some(first.getStruct(0).getLong(0) -> first.getStruct(0).getString(1))
   }
+
+  def violationError(stream: String, message: String): IllegalArgumentException =
+    new IllegalArgumentException(s"Record validation failed for stream $stream: $message")
+
+  /** Strict mode (reference behavior): fail on the first invalid record in
+    * input order. Only that one record's message reaches the driver. */
+  def validateOrThrow(df: DataFrame, cc: CompiledConstraints,
+                      root: Column, raw: Column, stream: String): Unit =
+    firstViolation(df, cc, root, raw).foreach { case (_, m) => throw violationError(stream, m) }
 }

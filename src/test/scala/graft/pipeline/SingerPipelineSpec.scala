@@ -140,6 +140,30 @@ class SingerPipelineSpec extends SparkSpec {
     assert(e.getMessage.contains("v_str") && e.getMessage.contains("too long"))
   }
 
+  private val tooLong = "this string is far too long for maxLength"
+
+  test("with two violating records the error names the earlier one, across streams") {
+    val lines = Seq(
+      schemaMsg("alpha"), schemaMsg("beta"),
+      s"""{"type": "RECORD", "stream": "beta", "record": {"pk": 1, "v_str": "$tooLong", "v_int": 1}}""",
+      """{"type": "RECORD", "stream": "alpha", "record": {"pk": "not-an-int", "v_str": "s", "v_int": 1}}""")
+    val e = intercept[IllegalArgumentException] {
+      SingerPipeline.run(spark, writeCorpus(lines), outDir(), TargetConfig())
+    }
+    assert(e.getMessage.startsWith("Record validation failed for stream beta: v_str"))
+    assert(e.getMessage.contains("too long"))
+  }
+
+  test("a violation in the later-sorted stream leaves no output for either stream") {
+    val out = outDir()
+    val lines = corpus :+
+      s"""{"type": "RECORD", "stream": "gamma", "record": {"pk": 11, "v_str": "$tooLong", "v_int": 1}}"""
+    intercept[IllegalArgumentException] {
+      SingerPipeline.run(spark, writeCorpus(lines), out, TargetConfig(), clock = () => "T5")
+    }
+    assert(new java.io.File(out).list().isEmpty)
+  }
+
   test("inline validation aborts on violation during the write pass") {
     val lines = Seq(
       schemaMsg("alpha"),

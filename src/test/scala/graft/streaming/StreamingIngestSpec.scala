@@ -160,6 +160,20 @@ class StreamingIngestSpec extends SparkSpec {
     assert(messages(e).exists(_.contains("Message is missing required key 'record'")))
   }
 
+  test("streaming: a batch failing validation writes no stream, so a retry duplicates nothing") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("stream-out10")
+    val batch = Seq(
+      schemaLine, schemaLine.replace("\"s1\"", "\"s2\""),
+      """{"type": "RECORD", "stream": "s1", "record": {"pk": 1, "v": "a"}}""",
+      """{"type": "RECORD", "stream": "s2", "record": {"pk": 2, "v": "far too long"}}""")
+    val ingest = new StreamingIngest(spark, out.toString,
+      TargetConfig(streamsInSeparateFolder = true))
+    val e = intercept[IllegalArgumentException](ingest.processBatch(batch.toDF("value"), 0L))
+    assert(e.getMessage.startsWith("Record validation failed for stream s2: v"))
+    assert(out.toFile.list().isEmpty)
+  }
+
   test("streaming: naming_convention + s3_key_prefix shape the output key (S8/L3 parity)") {
     val in = Files.createTempDirectory("stream-in7")
     val out = Files.createTempDirectory("stream-out7").toString

@@ -1,5 +1,8 @@
 package graft.validate
 
+import java.nio.file.Files
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.model.Singer
@@ -137,5 +140,64 @@ class ConstraintsSpec extends SparkSpec {
       .stripMargin.replace("\n", " ")
     assert(violation(s, """{"v": null}""").isEmpty)
     assert(violation(s, """{}""").isEmpty)
+  }
+
+  private val strSchema = Singer.parseJson(
+    s"""{"properties": {"pk": $intProp, "v": {"type": ["null", "string"], "maxLength": 3}}}""")
+
+  test("validateOrThrow names the earliest violating record in input order") {
+    import spark.implicits._
+    // The later record (idx 9) comes first in the only partition: taking
+    // whichever violation is found first would name it.
+    val df = Seq(9L -> """{"pk": "x", "v": "ok"}""", 5L -> """{"pk": 1, "v": "toolong"}""",
+        7L -> """{"pk": 2, "v": "ok"}""").toDF("idx", "rec").coalesce(1)
+      .withColumn("r", from_json(col("rec"), JsonSchemaConverter.toStructType(strSchema)))
+    val cc = Constraints.compile(strSchema)
+    assert(Constraints.firstViolation(df, cc, col("r"), col("rec"))
+      .contains(5L -> "v: toolong is too long (maxLength 3)"))
+    val e = intercept[IllegalArgumentException] {
+      Constraints.validateOrThrow(df, cc, col("r"), col("rec"), "s")
+    }
+    assert(e.getMessage == "Record validation failed for stream s: v: toolong is too long (maxLength 3)")
+    assert(Constraints.firstViolation(df.filter(col("idx") === 7L), cc, col("r"), col("rec")).isEmpty)
+  }
+
+  test("validation of a one-split input runs on every core") {
+    val f = Files.createTempFile("records", ".jsonl")
+    Files.writeString(f, (1 to 2000).map(i => s"""{"pk": $i, "v": "abc"}""").mkString("\n"))
+    val raw = spark.read.textFile(f.toString).toDF("rec")
+      .withColumn("idx", monotonically_increasing_id())
+    assert(raw.rdd.getNumPartitions == 1)
+    val cores = spark.sparkContext.defaultParallelism
+    // The pipeline's shape: fan the one split out, then parse.
+    val df = raw.repartition(cores)
+      .withColumn("r", from_json(col("rec"), JsonSchemaConverter.toStructType(strSchema)))
+
+    // Stage sizes seen while validating. Listener events arrive
+    // asynchronously and in order, so the end of a marker job run after
+    // the call proves every earlier stage has been reported.
+    val stageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
+    val markerDone = new java.util.concurrent.CountDownLatch(1)
+    val marker = "constraints-spec-marker"
+    val listener = new SparkListener {
+      @volatile private var markerJob = -1
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == marker)
+          markerJob = e.jobId
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob) markerDone.countDown()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (markerDone.getCount > 0) stageTasks.add(e.stageInfo.numTasks)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Constraints.validateOrThrow(df, Constraints.compile(strSchema), col("r"), col("rec"), "s")
+      spark.sparkContext.setJobGroup(marker, marker)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.clearJobGroup()
+      assert(markerDone.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    assert(stageTasks.asScala.map(_.intValue).max >= cores)
   }
 }
